@@ -41,6 +41,10 @@ from typing import Any, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -363,55 +367,44 @@ def _replay(xid: str, stmts: list[dict], markers: list[dict], recs: list[dict]):
     return stmts, markers, emitted
 
 
-try:  # Spark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+class TxnAssemblyProcessor(StatefulProcessor):
+    """Per-XID transaction assembly on the transformWithStateInPandas
+    API: ListState for statements and markers."""
 
-    class TxnAssemblyProcessor(StatefulProcessor):
-        """Per-XID transaction assembly on the transformWithStateInPandas
-        API: ListState for statements and markers."""
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._stmts = handle.getListState("stmts", _STMT_STRUCT)
+        self._markers = handle.getListState("rb_markers", _MARKER_STRUCT)
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stmts = handle.getListState("stmts", _STMT_STRUCT)
-            self._markers = handle.getListState("rb_markers", _MARKER_STRUCT)
+    def handleInputRows(self, key, rows, timerValues):
+        (xid,) = key
+        stmts = _rows_to_dicts(list(self._stmts.get()), _STMT_FIELDS)
+        markers = _rows_to_dicts(list(self._markers.get()), _MARKER_FIELDS)
+        recs = _records_sorted(rows)
+        stmts, markers, emitted = _replay(xid, stmts, markers, recs)
 
-        def handleInputRows(self, key, rows, timerValues):
-            (xid,) = key
-            stmts = _rows_to_dicts(list(self._stmts.get()), _STMT_FIELDS)
-            markers = _rows_to_dicts(list(self._markers.get()), _MARKER_FIELDS)
-            recs = _records_sorted(rows)
-            stmts, markers, emitted = _replay(xid, stmts, markers, recs)
+        if stmts or markers:
+            self._stmts.put(
+                [tuple(s[f] for f in _STMT_FIELDS) for s in stmts]
+            )
+            self._markers.put(
+                [tuple(m[f] for f in _MARKER_FIELDS) for m in markers]
+            )
+        else:
+            self._stmts.clear()
+            self._markers.clear()
+        if emitted:
+            yield pd.DataFrame(
+                emitted, columns=[f.name for f in OUTPUT_SCHEMA.fields]
+            )
 
-            if stmts or markers:
-                self._stmts.put(
-                    [tuple(s[f] for f in _STMT_FIELDS) for s in stmts]
-                )
-                self._markers.put(
-                    [tuple(m[f] for f in _MARKER_FIELDS) for m in markers]
-                )
-            else:
-                self._stmts.clear()
-                self._markers.clear()
-            if emitted:
-                yield pd.DataFrame(
-                    emitted, columns=[f.name for f in OUTPUT_SCHEMA.fields]
-                )
-
-        def close(self) -> None:
-            pass
-
-except ImportError:  # pragma: no cover - older Spark
-    TxnAssemblyProcessor = None  # type: ignore[assignment]
+    def close(self) -> None:
+        pass
 
 
 def assemble_transactions_tws(changes: DataFrame) -> DataFrame:
     """transformWithStateInPandas form of :func:`assemble_transactions`."""
     from oracdc_spark.session import ship_package
 
-    if TxnAssemblyProcessor is None:
-        raise RuntimeError("transformWithStateInPandas requires Spark >= 4.0")
     ship_package(changes.sparkSession)
     return changes.groupBy("xid").transformWithStateInPandas(
         statefulProcessor=TxnAssemblyProcessor(),

@@ -11,6 +11,13 @@ Offsets/exactly-once: the checkpoint directory carries source offsets
 and the state store; the MERGE sink is idempotent under replay because
 last-write-wins comparison includes (commit_scn, scn, ssn) — together
 the F5 replay contract.
+
+The sink materialises each assembled micro-batch once (persist on entry,
+unpersist on exit).  The batch handed to ``foreachBatch`` is a lineage
+over the stateful Python stage, so every action the sink runs on it (the
+merge's affected-bucket collect, its bucket write, the strict-mode
+count) would otherwise re-run the assembly, re-commit its state-store
+version and add its rows to the stateful node's progress metrics again.
 """
 
 from __future__ import annotations
@@ -73,7 +80,13 @@ def run_pipeline(
     OraCdcDataException task stop.  ``trigger_ms`` paces micro-batches
     (processingTime trigger) — the G11 load-reduction pause
     (``a2.reduce.load.ms``, Parameters.java:486-494): reading waits
-    between triggers while emission (the sink) still completes."""
+    between triggers while emission (the sink) still completes.
+
+    Each micro-batch is persisted for the duration of the sink, so the
+    stateful assembly, its state-store update and its commit run once
+    per trigger whatever the sink mode; a lost cached partition is
+    recomputed from the same state version, so the replay contract
+    holds."""
     if mode not in ("replicate", "audit_trail"):
         raise ValueError(f"bad sink mode: {mode}")
     stream = feed_stream(spark, feed_dir, max_files_per_trigger)
@@ -82,28 +95,32 @@ def run_pipeline(
     assembled = assemble_transactions(stream, impl=impl)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if strict_completeness:
-            import pyspark.sql.functions as F
+        # no emptiness check: it would be one more action over the batch,
+        # and the merges return early when the batch touches no bucket
+        batch.persist()
+        try:
+            if strict_completeness:
+                import pyspark.sql.functions as F
 
-            from oracdc_spark.operators.filters import (
-                assert_complete,
-                incomplete_rows_predicate,
-            )
-
-            # post-assembly records are all non-rollback survivors
-            assert_complete(
-                batch.withColumn("rollback", F.lit(False)).filter(
-                    incomplete_rows_predicate()
+                from oracdc_spark.operators.filters import (
+                    assert_complete,
+                    incomplete_rows_predicate,
                 )
-            )
-        if mode == "audit_trail":
-            from oracdc_spark.sinks.merge import scd2_merge_batch
 
-            scd2_merge_batch(batch.sparkSession, batch, replica_path)
-            return
-        merge_batch(batch.sparkSession, batch, replica_path)
+                # post-assembly records are all non-rollback survivors
+                assert_complete(
+                    batch.withColumn("rollback", F.lit(False)).filter(
+                        incomplete_rows_predicate()
+                    )
+                )
+            if mode == "audit_trail":
+                from oracdc_spark.sinks.merge import scd2_merge_batch
+
+                scd2_merge_batch(batch.sparkSession, batch, replica_path)
+            else:
+                merge_batch(batch.sparkSession, batch, replica_path)
+        finally:
+            batch.unpersist()
 
     writer = (
         assembled.writeStream.foreachBatch(sink)

@@ -91,6 +91,148 @@ def test_end_to_end_pipeline_replica(spark):
         assert got == expected
 
 
+def _rec(xid, scn, op, pk=None, ssn=0, price=0.0, rollback=False):
+    """One feed record; ``pk=None`` makes it a transaction-control record."""
+    dml = pk is not None
+    return {
+        "scn": scn, "ssn": ssn, "rba": f"1.{scn}.{ssn}", "xid": xid, "op": op,
+        "rollback": rollback, "owner": "SCOTT" if dml else None,
+        "table_name": "ORDERS" if dml else None,
+        "row_id": f"R{pk}" if dml else None, "pk": pk,
+        "totalprice": price if dml else None, "status": "O" if dml else None,
+        "before_totalprice": None, "before_status": None, "con_id": 3,
+        "changed_cols": "TOTALPRICE,STATUS" if dml and op != 2 else "",
+    }
+
+
+# Hand-built three-file feed (one file per trigger).  T2 commits in a
+# later file than its DML and partially rolls back its update of pk 2;
+# T3 rolls back whole; the last file holds only T6, still open at the
+# end, so its trigger emits nothing.
+SMALL_FEED = [
+    [
+        _rec("T1", 10, 1, pk=1, price=10.0),
+        _rec("T2", 11, 1, pk=2, price=20.0),
+        _rec("T1", 12, 7),
+        _rec("T2", 13, 3, pk=2, price=21.0),
+        _rec("T2", 13, 3, pk=2, ssn=1, rollback=True),
+        _rec("T3", 14, 1, pk=3, price=30.0),
+        _rec("T3", 15, 36),
+    ],
+    [
+        _rec("T2", 20, 7),
+        _rec("T4", 21, 3, pk=1, price=11.0),
+        _rec("T4", 22, 2, pk=2),
+        _rec("T5", 23, 1, pk=5, price=50.0),
+        _rec("T4", 24, 7),
+        _rec("T5", 25, 7),
+    ],
+    [
+        _rec("T6", 30, 1, pk=6, price=60.0),
+        _rec("T6", 31, 3, pk=1, price=12.0),
+    ],
+]
+
+
+def _write_feed_file(spark, feed_dir: str, i: int, recs: list[dict]) -> None:
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from oracdc_spark.streaming.pipeline import FEED_DDL
+
+    schema = to_arrow_schema(spark.createDataFrame([], FEED_DDL).schema)
+    os.makedirs(feed_dir, exist_ok=True)
+    # written aside and renamed in, so the source never lists a partial file
+    tmp = os.path.join(os.path.dirname(feed_dir), f".redo-{i:03d}.parquet")
+    pq.write_table(pa.Table.from_pylist(recs, schema=schema), tmp)
+    os.rename(tmp, os.path.join(feed_dir, f"redo-{i:03d}.parquet"))
+
+
+def _stateful_output_rows(query) -> int:
+    """``numOutputRows`` of the assembly node in the last micro-batch plan."""
+    stack = [query._jsq.streamingQuery().lastExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            return node.metrics().apply("numOutputRows").value()
+        children = node.children()
+        stack += [children.apply(i) for i in range(children.size())]
+    raise AssertionError("no FlatMapGroupsInPandasWithState node in the plan")
+
+
+@pytest.mark.parametrize("mode", ["replicate", "audit_trail"])
+def test_pipeline_small_feed_matches_batch(spark, tmp_path, mode):
+    """Fast-tier end-to-end run of ``run_pipeline`` in both sink modes:
+    the replica equals the batch operators over the whole feed, and a
+    trigger whose transactions all stay open leaves the replica's
+    manifest untouched (no generation bump)."""
+    from oracdc_spark.operators.cdc import scd2_history
+    from oracdc_spark.sinks.merge import MANIFEST, scd2_state
+    from oracdc_spark.streaming.pipeline import FEED_DDL
+
+    feed_dir, replica = str(tmp_path / "feed"), str(tmp_path / "replica")
+    for i, recs in enumerate(SMALL_FEED[:2]):
+        _write_feed_file(spark, feed_dir, i, recs)
+    q = run_pipeline(
+        spark, feed_dir, replica, str(tmp_path / "ckpt"), mode=mode,
+        strict_completeness=True,
+    )
+    try:
+        q.processAllAvailable()
+        # trigger 2 emits T2's insert (its update is cancelled), T4's
+        # update and delete, and T5's insert
+        assert _stateful_output_rows(q) == 4
+        manifest = (tmp_path / "replica" / MANIFEST).read_bytes()
+        _write_feed_file(spark, feed_dir, 2, SMALL_FEED[2])
+        q.processAllAvailable()
+        assert _stateful_output_rows(q) == 0
+        last = q.lastProgress
+    finally:
+        q.stop()
+    assert last["batchId"] == 2 and last["numInputRows"] == len(SMALL_FEED[2])
+    assert (tmp_path / "replica" / MANIFEST).read_bytes() == manifest
+
+    feed = spark.read.schema(FEED_DDL).parquet(feed_dir)
+    if mode == "replicate":
+        cols = ["owner", "table_name", "pk", "totalprice", "status"]
+        got = replica_state(spark, replica).select(cols).collect()
+        expected = apply_changes(feed).select(cols).collect()
+    else:
+        cols = ["pk", "version", "valid_from_scn", "valid_to_scn",
+                "is_deleted", "is_current", "totalprice", "status"]
+        got = scd2_state(spark, replica).select(cols).collect()
+        expected = scd2_history(feed).select(cols).collect()
+    assert sorted(got) == sorted(expected)
+    assert len(expected) == (2 if mode == "replicate" else 5)
+
+
+def test_sink_runs_assembly_once_per_trigger(spark, tmp_path):
+    """The sink acts on a materialised batch: the stateful node of a
+    trigger that commits N single-row transactions reports N output
+    rows (each re-run of the assembly would add N more), and no batch
+    stays cached once the trigger is done."""
+    n = 40
+    feed_dir = str(tmp_path / "feed")
+    _write_feed_file(spark, feed_dir, 0, [
+        r for k in range(n)
+        for r in (_rec(f"X{k}", 10 + 2 * k, 1, pk=k, price=float(k)),
+                  _rec(f"X{k}", 11 + 2 * k, 7))
+    ])
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
+    q = run_pipeline(spark, feed_dir, str(tmp_path / "replica"), str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        assert _stateful_output_rows(q) == n
+    finally:
+        q.stop()
+    assert jsc.getPersistentRDDs().size() == cached_before
+    assert replica_state(spark, str(tmp_path / "replica")).count() == n
+
+
 class _FakeState:
     """Duck-typed GroupState for driving assemble_fn directly."""
 
@@ -199,8 +341,6 @@ def _run_tws(rows, handle=None):
         TxnAssemblyProcessor,
     )
 
-    if TxnAssemblyProcessor is None:
-        pytest.skip("transformWithStateInPandas API absent (Spark < 4)")
     handle = handle or _FakeHandle()
     proc = TxnAssemblyProcessor()
     proc.init(handle)
