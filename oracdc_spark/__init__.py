@@ -15,8 +15,8 @@ Spark primitives:
   single / wrapped schema modes,
 * sink SQL generation (`oracdc_spark.sinks`): per-dialect upsert/
   create-table (PostgreSQL / MySQL / Oracle / MSSQL / ClickHouse),
-* streaming pipeline (`oracdc_spark.streaming`): per-XID stateful assembly
-  with applyInPandasWithState,
+* streaming pipeline (`oracdc_spark.streaming`): stateful transaction
+  assembly with applyInPandasWithState over xid-hash buckets,
 * large-scale training-data ops (`oracdc_spark.operators.dedup`,
   `.similarity`, `.textops`, `.multimodal`): exact/minhash/simhash dedup,
   ANN search, language-ID / quality scoring / tokenization, multimodal

@@ -560,8 +560,8 @@ class OraCdcConnector:
             spark.streams.addListener(listener)
         self._listener = listener
         mfpt = int(self.config.get("a2.batch.size", 1))
-        # reference: ChronicleQueue = off-heap appendable queue; the Spark
-        # analog is the incrementally-appendable ListState backend (tws).
+        # reference: ChronicleQueue = off-heap queue; mapped onto the
+        # per-xid ListState backend (tws), ArrayList onto the bucket one.
         impl_map = {"ChronicleQueue": "tws", "ArrayList": "apply"}
         impl_key = self.config.get("a2.transaction.implementation", "ArrayList")
         if impl_key not in impl_map:

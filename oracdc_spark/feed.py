@@ -228,9 +228,7 @@ def change_feed(spark: SparkSession, sf_dir: str, with_customer: bool = False) -
     and every consumer orders by (scn, ssn) internally.
 
     Scale note: every step is narrow except the per-xid max for control
-    records, which is one partial-aggregated shuffle on ``xid`` — the same
-    key the stateful assembly operator groups by downstream, so at scale the
-    exchange is reused rather than repeated.
+    records, which is one partial-aggregated shuffle on ``xid``.
     """
     path = _FEED_CACHE.get((os.path.abspath(sf_dir), with_customer))
     if path is not None:

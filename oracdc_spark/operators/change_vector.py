@@ -47,9 +47,7 @@ def vector_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte maps carry no entry for NULL — the tri-state the wrapped sink
     relies on), simulated here by dropping STATUS from every 9th row."""
     from oracdc_spark.functions.decoders import ora_number_encode_hex
-    from oracdc_spark.session import ship_package
 
-    ship_package(spark)
     o = load_table(spark, sf_dir, "orders")
     pk_b = F.unhex(ora_number_encode_hex(F.col("o_orderkey").cast("double")))
     price_b = F.unhex(ora_number_encode_hex(F.col("o_totalprice")))
@@ -94,9 +92,6 @@ def project_typed(vectors: DataFrame, dictionary: dict[int, tuple[str, str]] | N
 
 
 def change_vector_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from oracdc_spark.session import ship_package
-
-    ship_package(spark)
     return project_typed(vector_feed(spark, sf_dir))
 
 

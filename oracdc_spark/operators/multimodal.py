@@ -189,9 +189,6 @@ def synthetic_codec_media(docs: DataFrame) -> DataFrame:
     """Media table whose image/audio payloads are REAL decodable formats
     (PPM / WAV) generated deterministically per media_id; video stays an
     opaque payload (no in-container codec — documented stub)."""
-    from oracdc_spark.session import ship_package
-
-    ship_package(docs.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -249,9 +246,6 @@ def decode_features(media: DataFrame) -> DataFrame:
     """Real decode over Arrow batches: PPM dims + pixel sum for images,
     WAV sample count / exact duration / energy for audio.  Videos are
     excluded (no codec available — the explicit partial)."""
-    from oracdc_spark.session import ship_package
-
-    ship_package(media.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -288,9 +282,6 @@ def _decode_image_stub(payload: bytes) -> tuple[int, int]:
 def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over Arrow batches (mapInPandas): digest,
     byte length, stub-decoded dimensions for images."""
-    from oracdc_spark.session import ship_package
-
-    ship_package(media.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -407,9 +398,6 @@ def _image_hashes(media: DataFrame, grid: int = 4) -> DataFrame:
     """The decode + aHash mapInPandas stage of image_ahash, without the
     group-size window — shared by image_near_dups.  Output:
     (media_id, ahash)."""
-    from oracdc_spark.session import ship_package
-
-    ship_package(media.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -581,9 +569,6 @@ def _audio_hashes(media: DataFrame, segments: int = 8) -> DataFrame:
     """The decode + energy-hash mapInPandas stage of audio_energy_hash,
     without the group-size window — shared by audio_near_dups.
     Output: (media_id, ehash)."""
-    from oracdc_spark.session import ship_package
-
-    ship_package(media.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -647,9 +632,7 @@ def image_dhash(media: DataFrame, grid: int = 4) -> DataFrame:
     narrower than grid+1 columns) read as 0, mirrored in the oracle.
 
     Output: (media_id, dhash, n_same_hash) for image rows."""
-    from oracdc_spark.session import ship_package
 
-    ship_package(media.sparkSession)
     gw = grid + 1
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -712,9 +695,6 @@ def audio_zcr_hash(media: DataFrame, segments: int = 8) -> DataFrame:
     executors.
 
     Output: (media_id, zhash, n_same_hash) for audio rows."""
-    from oracdc_spark.session import ship_package
-
-    ship_package(media.sparkSession)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -33,7 +33,6 @@ def get_spark(
       testdata.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    _allow_shj = os.environ.get("SPARK_GRAFT_ALLOW_SHJ", "0") == "1"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
@@ -49,32 +48,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        # Joins (guide §3.1): SPARK_GRAFT_ALLOW_SHJ=1 lets the planner pick
-        # shuffled-hash join where the per-partition build side fits and
-        # lets AQE rewrite sort-merge to shuffled-hash below a 64 MB
-        # local-map threshold — the guide-§9 cluster baseline.  NOT the
-        # local default, on a measurement: at bench scale every declared
-        # join is broadcast (or the lone surviving SortMergeJoin is not
-        # rewritten), the executed plans are bit-identical under both
-        # settings at 8 AND 32 cores, and the apparent A/B "win" reproduced
-        # under a null test (both sides identical config) — it was
-        # second-position bias in the interleaved protocol, not the conf
-        # (r13 notes, "SHJ config A/B").  An effectless conf stays off so
-        # the bench remains comparable; flip it on for cluster joins whose
-        # post-shuffle partitions exceed the broadcast threshold.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "false" if _allow_shj else "true",
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            "64m" if _allow_shj else "0",
-        )
     )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ship_package(spark)
+    return spark
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -83,8 +63,12 @@ def ship_package(spark: SparkSession) -> None:
     Python UDF / applyInPandasWithState functions defined inside the
     package are pickled *by reference*; workers must import the module.
     A driver that merely did ``sys.path.insert`` (not PYTHONPATH) would
-    otherwise fail with ModuleNotFoundError on the first stateful stage.
-    Idempotent; ~50 KB zip shipped once per SparkContext.
+    otherwise fail with ModuleNotFoundError on the first Python stage.
+    Called where sessions enter the package: :func:`get_spark`, the
+    ``__spark_entry__`` builders and the streaming assembly, so a session
+    built elsewhere gets it from any cwd.  Idempotent; the zip is rebuilt
+    and shipped once per SparkContext, so a file left by an earlier
+    process with the same pid is never shipped.
     """
     import os
     import tempfile
@@ -93,21 +77,18 @@ def ship_package(spark: SparkSession) -> None:
     import oracdc_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(oracdc_spark.__file__))
-    marker = f"_oracdc_pyfile_shipped_{spark.sparkContext.applicationId}"
-    if getattr(spark, marker, False):
+    sc = spark.sparkContext
+    if getattr(sc, "_oracdc_pyfile_shipped", False):
         return
     zpath = os.path.join(
         tempfile.gettempdir(), f"oracdc_spark_pkg_{os.getpid()}.zip"
     )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        arc = os.path.join(
-                            "oracdc_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        z.write(full, arc)
-    spark.sparkContext.addPyFile(zpath)
-    setattr(spark, marker, True)
+    with zipfile.ZipFile(zpath, "w") as z:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    arc = os.path.join("oracdc_spark", os.path.relpath(full, pkg_dir))
+                    z.write(full, arc)
+    sc.addPyFile(zpath)
+    sc._oracdc_pyfile_shipped = True

@@ -4,7 +4,8 @@ One streaming DAG replaces the reference's threads and queues
 (SURVEY §3 "Spark restatement of the lifecycle"):
 
     file/Kafka source (S1/S2-equivalent feed)
-      → stateful per-XID assembly (G1-G9, streaming/assembly.py)
+      → stateful transaction assembly per xid-hash bucket (G1-G9,
+        streaming/assembly.py)
       → foreachBatch: PK dedup (K6) + MERGE into the replica (K2/K3)
 
 Offsets/exactly-once: the checkpoint directory carries source offsets
@@ -82,9 +83,13 @@ def run_pipeline(
     (``a2.reduce.load.ms``, Parameters.java:486-494): reading waits
     between triggers while emission (the sink) still completes.
 
-    Each micro-batch is persisted for the duration of the sink, so the
-    stateful assembly, its state-store update and its commit run once
-    per trigger whatever the sink mode; a lost cached partition is
+    The assembly's state is keyed by ``ASSEMBLY_BUCKETS`` (64) xid-hash
+    buckets, so its stage runs at most 64 tasks in parallel whatever
+    ``spark.sql.shuffle.partitions`` says, and a checkpoint written
+    before the bucket key fails on restart with Spark's state-schema
+    error.  Each micro-batch is persisted for the duration of the sink,
+    so the stateful assembly, its state-store update and its commit run
+    once per trigger whatever the sink mode; a lost cached partition is
     recomputed from the same state version, so the replay contract
     holds."""
     if mode not in ("replicate", "audit_trail"):

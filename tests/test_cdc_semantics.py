@@ -122,10 +122,10 @@ def test_partial_rollback_interleaved_lifo(spark):
 
 
 def test_streaming_pairing_matches_batch_rollback_first():
-    """_replay/_pair_lifo (streaming) must agree with
+    """_pair_lifo (the streaming scalar oracle) must agree with
     partial_rollback_filter (batch) on the rollback-first and the
     interleaved-LIFO shapes, independent of arrival order."""
-    from oracdc_spark.streaming.assembly import _pair_lifo
+    from tests.assembly_oracle import _pair_lifo
 
     def st(scn, ssn, pk=1):
         return {"scn": scn, "ssn": ssn, "row_id": f"R{pk}", "pk": pk,
@@ -165,7 +165,7 @@ def test_partial_rollback_zero_rows(spark):
     # only the untouched insert survives; the cancelled pk=2 rows are gone
     assert [(r.pk, r.scn) for r in out] == [(1, 10)]
 
-    from oracdc_spark.streaming.assembly import _pair_lifo
+    from tests.assembly_oracle import _pair_lifo
 
     stmts = [{"scn": 20 + j, "ssn": 0, "row_id": "R2", "rollback": False}
              for j in range(5)]
@@ -181,7 +181,7 @@ def test_partial_rollback_closed_form_matches_simulation(spark):
     random marker/original interleavings, checked in ONE Spark pass."""
     import random
 
-    from oracdc_spark.streaming.assembly import _pair_lifo
+    from tests.assembly_oracle import _pair_lifo
 
     rng = random.Random(20260813)
     rows, expected = [], set()

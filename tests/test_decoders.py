@@ -184,9 +184,7 @@ class TestChangeVectorProjection:
     def test_absent_map_entry_is_typed_null(self, spark):
         from oracdc_spark.functions.decoders import encode_number
         from oracdc_spark.operators.change_vector import project_typed
-        from oracdc_spark.session import ship_package
 
-        ship_package(spark)
         img_full = {1: encode_number(7), 2: encode_number(12.5), 3: b"OK"}
         img_no_status = {1: encode_number(8), 2: encode_number(3.25)}
         df = spark.createDataFrame(

@@ -52,7 +52,7 @@ def test_assemble_fn_empty_group(spark):
     """The state function itself handles an empty pandas iterator."""
     import pandas as pd
 
-    from oracdc_spark.streaming.assembly import _STMT_FIELDS, assemble_fn
+    from oracdc_spark.streaming.assembly import ROW_FIELDS, assemble_fn
 
     class FakeState:
         exists = False
@@ -63,7 +63,7 @@ def test_assemble_fn_empty_group(spark):
         def remove(self):
             pass
 
-    out = list(assemble_fn(("A",), iter([pd.DataFrame(columns=_STMT_FIELDS)]), FakeState()))
+    out = list(assemble_fn(("A",), iter([pd.DataFrame(columns=ROW_FIELDS)]), FakeState()))
     assert out == []
 
 

@@ -5,9 +5,6 @@ from oracdc_spark.functions import register_all
 
 
 def test_decoders_callable_from_sql(spark):
-    from oracdc_spark.session import ship_package
-
-    ship_package(spark)
     register_all(spark)
     row = spark.sql(
         """

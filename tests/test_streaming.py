@@ -233,11 +233,41 @@ def test_sink_runs_assembly_once_per_trigger(spark, tmp_path):
     assert replica_state(spark, str(tmp_path / "replica")).count() == n
 
 
+def test_open_transactions_share_bucket_state(spark, tmp_path):
+    """More open transactions than buckets: the stateful operator holds
+    at most ASSEMBLY_BUCKETS state rows; once every transaction commits
+    the state is empty and the replica equals batch apply_changes."""
+    from oracdc_spark.streaming.assembly import ASSEMBLY_BUCKETS
+    from oracdc_spark.streaming.pipeline import FEED_DDL
+
+    n = 3 * ASSEMBLY_BUCKETS
+    feed_dir, replica = str(tmp_path / "feed"), str(tmp_path / "replica")
+    _write_feed_file(spark, feed_dir, 0, [
+        _rec(f"X{k}", 10 + k, 1, pk=k, price=float(k)) for k in range(n)
+    ])
+    q = run_pipeline(spark, feed_dir, replica, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+        held = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+        assert 0 < held <= ASSEMBLY_BUCKETS
+        _write_feed_file(spark, feed_dir, 1, [_rec(f"X{k}", 1000 + k, 7) for k in range(n)])
+        q.processAllAvailable()
+        assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 0
+    finally:
+        q.stop()
+    cols = ["owner", "table_name", "pk", "totalprice", "status"]
+    feed = spark.read.schema(FEED_DDL).parquet(feed_dir)
+    got = replica_state(spark, replica).select(cols).collect()
+    assert len(got) == n
+    assert sorted(got) == sorted(apply_changes(feed).select(cols).collect())
+
+
 class _FakeState:
     """Duck-typed GroupState for driving assemble_fn directly."""
 
     def __init__(self):
         self._v = None
+        self.writes = 0
 
     @property
     def exists(self):
@@ -249,25 +279,33 @@ class _FakeState:
 
     def update(self, v):
         self._v = v
+        self.writes += 1
 
     def remove(self):
         self._v = None
 
 
-def _run_assemble(rows, state=None):
-    import pandas as pd
+def _arrow_frame(rows):
+    """Rows as the pandas frame Spark's Arrow batches arrive as."""
+    import pyarrow as pa
 
-    from oracdc_spark.streaming.assembly import _STMT_FIELDS, assemble_fn
+    from oracdc_spark.streaming.assembly import _ARROW_ROW
 
-    state = state or _FakeState()
-    pdf = pd.DataFrame(rows, columns=_STMT_FIELDS)
-    out = list(assemble_fn(("A",), iter([pdf]), state))
-    return (pd.concat(out) if out else None), state
+    return pa.Table.from_pylist(rows, schema=_ARROW_ROW).to_pandas()
 
 
-def _stmt(scn, ssn, op, rollback=False, pk=1):
+def _run_replay(rows, buffered=None):
+    from oracdc_spark.streaming.assembly import _replay_frame
+
+    if buffered is None:
+        buffered = _arrow_frame([])
+    still_open, emitted = _replay_frame(buffered, _arrow_frame(rows))
+    return emitted, still_open
+
+
+def _stmt(scn, ssn, op, rollback=False, pk=1, xid="A"):
     return {
-        "scn": scn, "ssn": ssn, "rba": f"1.{scn}.{ssn}", "op": op,
+        "xid": xid, "scn": scn, "ssn": ssn, "rba": f"1.{scn}.{ssn}", "op": op,
         "rollback": rollback, "owner": "SCOTT", "table_name": "ORDERS",
         "row_id": f"R{pk}", "pk": pk, "totalprice": 1.0, "status": "O",
         "before_totalprice": None, "before_status": None,
@@ -277,7 +315,7 @@ def _stmt(scn, ssn, op, rollback=False, pk=1):
 
 def test_assemble_fn_sorts_arrival_order():
     """Shuffled arrival within a micro-batch (no intra-group order after
-    the xid exchange): pairing and control handling must follow redo
+    the bucket exchange): pairing and control handling must follow redo
     (scn, ssn) order, not arrival order."""
     rows = [
         _stmt(20, 0, 7),                      # commit arrives FIRST
@@ -285,8 +323,8 @@ def test_assemble_fn_sorts_arrival_order():
         _stmt(11, 1, 3),                      # original (cancelled)
         _stmt(10, 0, 1),
     ]
-    out, state = _run_assemble(rows)
-    assert not state.exists
+    out, still_open = _run_replay(rows)
+    assert still_open.empty
     assert list(out["scn"]) == [10]
     assert list(out["commit_scn"]) == [20]
 
@@ -300,13 +338,78 @@ def test_assemble_fn_commit_then_reused_xid():
         _stmt(10, 0, 1),
         _stmt(20, 0, 7),                      # commit between them in scn order
     ]
-    out, state = _run_assemble(rows)
+    out, still_open = _run_replay(rows)
     assert list(out["scn"]) == [10]
-    assert state.exists                       # scn=30 stays buffered
-    out2, state = _run_assemble([_stmt(40, 0, 7)], state)
+    assert not still_open.empty               # scn=30 stays buffered
+    out2, still_open = _run_replay([_stmt(40, 0, 7)], still_open)
     assert list(out2["scn"]) == [30]
     assert list(out2["commit_scn"]) == [40]
-    assert not state.exists
+    assert still_open.empty
+
+
+def test_bucket_state_written_only_when_open_set_changes():
+    """assemble_fn keeps the bucket's state untouched when a batch only
+    touches other transactions' closed work, rewrites it when the open
+    set changes and removes it once the bucket has nothing open."""
+    from oracdc_spark.streaming.assembly import _from_ipc, assemble_fn
+
+    def run(rows, state):
+        return list(assemble_fn((0,), iter([_arrow_frame(rows)]), state))
+
+    state = _FakeState()
+    run([_stmt(10, 0, 1, xid="A")], state)
+    assert state.writes == 1 and list(_from_ipc(state.get[0])["xid"]) == ["A"]
+    # B opens and commits inside one batch: A's buffer is carried as is
+    out = run([_stmt(11, 0, 1, xid="B"), _stmt(12, 0, 7, xid="B")], state)
+    assert list(out[0]["xid"]) == ["B"] and state.writes == 1
+    out = run([_stmt(10, 1, 1, xid="A")], state)
+    assert out == [] and state.writes == 2 and list(_from_ipc(state.get[0])["ssn"]) == [0, 1]
+    out = run([_stmt(13, 0, 7, xid="A")], state)
+    assert list(out[0]["commit_scn"]) == [13, 13] and not state.exists
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_bucket_replay_matches_scalar_oracle(seed):
+    """Random redo feeds — whole rollbacks, partial-rollback markers
+    before and after their originals, backward-LIFO pairs, xid reuse and
+    transactions left open — cut into random micro-batches with shuffled
+    arrival, spread over buckets and run through assemble_fn's state
+    round trip, emit exactly the scalar oracle's survivors (_pair_lifo
+    per committed transaction) and leave exactly the open rows in state."""
+    import random
+    import zlib
+
+    import pandas as pd
+
+    from oracdc_spark.streaming.assembly import _OUTPUT_FIELDS, ROW_FIELDS, _from_ipc, assemble_fn
+    from tests.assembly_oracle import cut_batches, random_feed
+
+    def canon(df, cols):
+        vals = df[cols].astype(object).where(df[cols].notna(), None)
+        return sorted(vals.itertuples(index=False, name=None))
+
+    rng = random.Random(seed)
+    rows, committed, open_rows = random_feed(rng, n_txns=60, n_xids=12)
+    expected = [{**r, "commit_scn": c} for c, survivors in committed.items() for r in survivors]
+    n_stmts = sum(1 for r in rows if r["op"] not in (7, 36) and not r["rollback"])
+    assert len(expected) < n_stmts  # the feed cancels and drops something
+
+    states, out = {}, []
+    for batch in cut_batches(rng, rows, n_batches=8):
+        buckets = {}
+        for r in batch:
+            buckets.setdefault(zlib.crc32(r["xid"].encode()) % 3, []).append(r)
+        for b, recs in buckets.items():
+            pdf = _arrow_frame(recs)
+            half = len(pdf) // 2  # a group may arrive in several chunks
+            state = states.setdefault(b, _FakeState())
+            out += assemble_fn((b,), iter([pdf.iloc[:half], pdf.iloc[half:]]), state)
+
+    got = pd.concat(out) if out else _arrow_frame([]).assign(commit_scn=0).iloc[:0]
+    assert canon(got, _OUTPUT_FIELDS) == canon(pd.DataFrame(expected, columns=_OUTPUT_FIELDS), _OUTPUT_FIELDS)
+    still = [_from_ipc(s.get[0]) for s in states.values() if s.exists]
+    got_open = pd.concat(still) if still else _arrow_frame([])
+    assert canon(got_open, ROW_FIELDS) == canon(_arrow_frame(open_rows), ROW_FIELDS)
 
 
 class _FakeListState:
@@ -336,23 +439,20 @@ class _FakeHandle:
 def _run_tws(rows, handle=None):
     import pandas as pd
 
-    from oracdc_spark.streaming.assembly import (
-        _STMT_FIELDS,
-        TxnAssemblyProcessor,
-    )
+    from oracdc_spark.streaming.assembly import TxnAssemblyProcessor
 
     handle = handle or _FakeHandle()
     proc = TxnAssemblyProcessor()
     proc.init(handle)
-    pdf = pd.DataFrame(rows, columns=_STMT_FIELDS)
-    out = list(proc.handleInputRows(("A",), iter([pdf]), None))
+    out = list(proc.handleInputRows(("A",), iter([_arrow_frame(rows)]), None))
     return (pd.concat(out) if out else None), handle
 
 
 def test_tws_processor_semantics_match_assemble_fn():
-    """The StatefulProcessor variant shares _replay with assemble_fn;
-    drive it through a fake handle (the real runtime needs protobuf,
-    absent here) and check the same sort/pair/commit-reuse semantics."""
+    """The StatefulProcessor variant shares _replay_frame with the bucket
+    form; drive it through a fake handle (the real runtime needs
+    protobuf, absent here) and check the same sort/pair/commit-reuse
+    semantics."""
     rows = [
         _stmt(20, 0, 7),                      # commit arrives first
         _stmt(11, 2, 3, rollback=True),       # marker before its original
@@ -363,13 +463,12 @@ def test_tws_processor_semantics_match_assemble_fn():
     out, handle = _run_tws(rows)
     assert list(out["scn"]) == [10]
     assert list(out["commit_scn"]) == [20]
-    # scn=30 buffered in ListState for the reused xid
-    assert handle.states["stmts"]._rows
+    # scn=30 buffered in the xid's ListState
+    assert handle.states["buffered"]._rows
     out2, handle = _run_tws([_stmt(40, 0, 7)], handle)
     assert list(out2["scn"]) == [30]
     assert list(out2["commit_scn"]) == [40]
-    assert not handle.states["stmts"]._rows
-    assert not handle.states["rb_markers"]._rows
+    assert not handle.states["buffered"]._rows
 
 
 @pytest.mark.slow

@@ -57,6 +57,10 @@ _NORM = [
     # so anchoring on it normalizes ONLY lambda variables — real
     # column aliases that happen to end in _<digits> are untouched.
     (re.compile(r"\blambda ([A-Za-z_][A-Za-z0-9_]*)_\d+\b"), r"lambda \1_N"),
+    # Round-robin repartitions to defaultParallelism
+    # (plans/parallel.py::ensure_parallelism) embed the host's core
+    # count; the fingerprint pins plan shape, not the host.
+    (re.compile(r"Repartition \d+, true"), "Repartition N, true"),
 ]
 
 
